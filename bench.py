@@ -24,11 +24,13 @@ One untimed warm-up of the first query precedes the passes (JVM +
 codegen warmup).
 
 ``SPARK_GRAFT_BENCH_COLD_CACHES=1`` (default 0, VERDICT r16 #6's
-cache-honesty mode) releases every module-level session cache (the
-shingle/cluster/edge/triangle/PPR indexes) before each timed pass, so
-every rep of a cache-backed dedup/graph query rebuilds its index
-instead of the default regime where min-over-reps measures warm-cache
-time and whichever query forces the build first absorbs its cost. Off
+cache-honesty mode) frees every entry of the session's artifact store
+(``artifacts.release_all``) before each timed pass: the shingle/
+cluster/edge/triangle/PPR indexes, and also the prepared storage
+layouts, replay splits and memoized vector expressions. Every rep of a
+cache-backed query then rebuilds what it reuses, instead of the default
+regime where min-over-reps measures warm-cache time and whichever
+query forces the build first absorbs its cost. Off
 by default: the BASELINE.md anchors were measured under the warm
 regime, so default runs stay comparable; the mode's numbers land in
 BENCH_DETAIL.json with "cold_caches": true.
@@ -60,25 +62,13 @@ COLD_CACHES = (
 )
 
 
-def _release_session_caches(spark) -> None:
-    """Unpersist every module-level session cache so the next pass
-    rebuilds them (the SPARK_GRAFT_BENCH_COLD_CACHES honesty mode)."""
-    from fluent_bit_filter_math_spark.operators import dedup, graph
-
-    dedup.release_shingle_index(spark)
-    dedup.release_cluster_map(spark)
-    graph.release_edge_index(spark)
-    graph.release_tri_und(spark)
-    graph.release_tri_oriented(spark)
-    graph.release_ppr_ranks(spark)
-
-
 def _force(df) -> None:
     """Execute the full plan, all columns, nothing on the driver."""
     df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> int:
+    from fluent_bit_filter_math_spark import artifacts
     from fluent_bit_filter_math_spark.session import get_spark
 
     spark = get_spark("bench", master=f"local[{CPUS}]")
@@ -126,7 +116,7 @@ def main() -> int:
     main_names = [n for n in qs if n not in floor_bound]
     for _ in range(REPS):
         if COLD_CACHES:
-            _release_session_caches(spark)
+            artifacts.release_all(spark)
         _run_pass(main_names)
     # Isolated floor-bound block: no interleaving with the bulk surface
     # (a co-scheduled heavy batch query perturbs the state-server RPC

@@ -21,8 +21,13 @@ in both engines.
 
 from __future__ import annotations
 
+from typing import Callable
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from fluent_bit_filter_math_spark import artifacts
 
 # ---------------------------------------------------------------------------
 # Cross-engine 60-bit hash.
@@ -117,16 +122,15 @@ def tokens(col: Column) -> Column:
 # charged 0.77 s of sim_ann_retrain's 7.8 s wall to HOF construction
 # alone). The UNRESOLVED expression tree is immutable and name-scoped,
 # so identical (helper, operand-text) builds are interchangeable across
-# plans — cache them. Lambda variables created by earlier builds carry
-# session-unique names (x_0, x_1, ...), so an operand that embeds one
-# (a helper called inside another lambda) produces a unique key and
-# simply never shares — safe by construction. Keys come from the JVM
-# expression text (one cheap py4j call) or the bare string for str
-# operands.
-_VEC_EXPR_CACHE: dict[tuple, Column] = {}
-
-
-def _vec_key(kind: str, *cols) -> tuple | None:
+# plans of one SparkContext — memoize them in the artifact store (the
+# applicationId in its key keeps a Column of a stopped context from
+# being served to the next one). Lambda variables created by earlier
+# builds carry session-unique names (x_0, x_1, ...), so an operand that
+# embeds one (a helper called inside another lambda) produces a unique
+# key and simply never shares — safe by construction. Keys come from
+# the JVM expression text (one cheap py4j call) or the bare string for
+# str operands.
+def _vec_key(*cols) -> tuple | None:
     parts = []
     for c in cols:
         if isinstance(c, str):
@@ -136,7 +140,15 @@ def _vec_key(kind: str, *cols) -> tuple | None:
                 parts.append(c._jc.toString())
             except Exception:  # noqa: BLE001 — cache is optional
                 return None
-    return (kind, *parts)
+    return tuple(parts)
+
+
+def _vec_expr(kind: str, build: Callable[[], Column], *cols) -> Column:
+    key = _vec_key(*cols)
+    sc = SparkContext._active_spark_context
+    if key is None or sc is None:
+        return build()
+    return artifacts.get_or_build(sc, "vec_expr", None, build, kind, *key)
 
 
 def _as_col(c) -> Column:
@@ -145,44 +157,33 @@ def _as_col(c) -> Column:
 
 def dot(a: Column | str, b: Column | str) -> Column:
     """Sequential-fold dot product in double precision."""
-    key = _vec_key("dot", a, b)
-    cached = _VEC_EXPR_CACHE.get(key) if key else None
-    if cached is not None:
-        return cached
-    a, b = _as_col(a), _as_col(b)
-    col = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    return _vec_expr(
+        "dot",
+        lambda: F.aggregate(
+            F.zip_with(
+                _as_col(a), _as_col(b),
+                lambda x, y: x.cast("double") * y.cast("double"),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+        a, b,
     )
-    if key:
-        _VEC_EXPR_CACHE[key] = col
-    return col
 
 
 def norm(a: Column | str) -> Column:
-    key = _vec_key("norm", a)
-    cached = _VEC_EXPR_CACHE.get(key) if key else None
-    if cached is not None:
-        return cached
-    col = F.sqrt(
-        F.aggregate(
-            _as_col(a),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
+    return _vec_expr(
+        "norm",
+        lambda: F.sqrt(
+            F.aggregate(
+                _as_col(a),
+                F.lit(0.0),
+                lambda acc, x: acc + x.cast("double") * x.cast("double"),
+            )
+        ),
+        a,
     )
-    if key:
-        _VEC_EXPR_CACHE[key] = col
-    return col
 
 
 def cosine(a: Column | str, b: Column | str) -> Column:
-    key = _vec_key("cosine", a, b)
-    cached = _VEC_EXPR_CACHE.get(key) if key else None
-    if cached is not None:
-        return cached
-    col = dot(a, b) / (norm(a) * norm(b))
-    if key:
-        _VEC_EXPR_CACHE[key] = col
-    return col
+    return _vec_expr("cosine", lambda: dot(a, b) / (norm(a) * norm(b)), a, b)

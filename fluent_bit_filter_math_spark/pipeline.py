@@ -16,17 +16,20 @@ micro-batch. The functions here only assemble plans:
 * :func:`read_events_stream` / :func:`run_stream_to_memory` — streaming
   parity harness: replay a parquet table as a stream and run it with
   ``trigger(availableNow=True)``, proving batch ≡ stream for every spec.
+* :func:`replay_split` — the memoized multi-file replay inputs that the
+  keyed-stream queries read in a fixed file order.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
-from typing import Mapping, Sequence
+from typing import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluent_bit_filter_math_spark import artifacts
 from fluent_bit_filter_math_spark.compile import apply_spec, compile_spec
 from fluent_bit_filter_math_spark.spec import MathSpec
 
@@ -119,6 +122,40 @@ def read_events_stream(
         if dtype == "timestamp_ntz":
             stream = stream.withColumn(name, F.col(name).cast("timestamp"))
     return stream
+
+
+def replay_split(
+    spark: SparkSession,
+    tag: str,
+    sf_dir: str,
+    frames: Callable[[], Sequence[DataFrame]],
+    *extra,
+) -> str:
+    """Glob path over a replay split: one single-file parquet dir per
+    frame of *frames()*, with mtimes in frame order (FileStreamSource
+    replays oldest first). Built once per session in the artifact store
+    — the split is data prep, not the operator under test."""
+
+    def build() -> str:
+        import glob
+        import time
+
+        src = artifacts.new_dir(tag)
+        parts = frames()
+        for i, df in enumerate(parts):
+            df.coalesce(1).write.parquet(os.path.join(src, f"f{i}"))
+        files = sorted(glob.glob(src + "/f*/part-*.parquet"))
+        if len(files) != len(parts):  # not assert: must hold under -O
+            raise RuntimeError(
+                f"{len(parts)}-file replay contract violated: {len(files)}"
+                " data files — degenerate split or multi-part write"
+            )
+        now = time.time()
+        for i, f in enumerate(files):
+            os.utime(f, (now + i, now + i))
+        return src
+
+    return artifacts.get_or_build(spark, tag, sf_dir, build, *extra) + "/f*"
 
 
 def stream_parts(default: int = 4) -> int:

@@ -29,29 +29,12 @@ read the result back. They need a scratch dir that is
 from __future__ import annotations
 
 import atexit
-import hashlib
 import os
 import shutil
 import tempfile
 
 _BASES: dict[str, str] = {}
 _GENS: dict[str, int] = {}
-
-
-def dir_key(path: str) -> str:
-    """Short filesystem-safe tag component unique to an absolute path.
-
-    Split builders that memoize prepared replay files per ``sf_dir``
-    must put this in their scratch tag: a tag shared across sf_dirs
-    means a cache miss for a SECOND sf_dir rotates the generation and
-    deletes the FIRST sf_dir's still-cached split, so alternating
-    sf_dirs (scaling sweeps, sf-parameterized tests) silently rebuild
-    on every switch (r9 ADVICE). Basename alone can collide across
-    parents, hence the hash suffix.
-    """
-    ap = os.path.abspath(path)
-    h = hashlib.md5(ap.encode()).hexdigest()[:6]
-    return f"{os.path.basename(ap) or 'root'}-{h}"
 
 
 def scratch_dir(tag: str) -> str:

@@ -38,10 +38,12 @@ import base64
 import hashlib
 import json
 import os
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fluent_bit_filter_math_spark import artifacts
 from fluent_bit_filter_math_spark.registry import register
 
 _LOG_DIR = "_log"
@@ -163,10 +165,14 @@ def _commit_min_reader(commit: dict) -> int:
 # cache is reachable from several driver threads at once under
 # overlap() (ADVICE r16), and two threads extending a shared list can
 # interleave reads of its length with appends, misaligning entries.
-# Each thread extends a private copy and publishes it with one atomic
-# assignment; racing publishes are prefix-consistent (commits are
-# immutable), so either winner is correct.
+# Each thread extends a private copy and publishes it under
+# _PROTO_LOCK, keeping the longer tuple: racing extensions are
+# prefix-consistent (commits are immutable), but a thread that read an
+# older head would otherwise overwrite a longer published prefix with
+# its shorter one, and readers of the newer versions would re-read
+# their commits.
 _PROTO_CACHE: dict[str, tuple[int, ...]] = {}
+_PROTO_LOCK = threading.Lock()
 
 
 def required_reader_version(
@@ -197,8 +203,9 @@ def required_reader_version(
                 # reader-atomic, so a torn read should no longer occur.
                 break
             ext.append(max(r, ext[-1] if ext else _FEATURE_BASE))
-        if len(ext) > len(_PROTO_CACHE.get(key, ())):
-            _PROTO_CACHE[key] = tuple(ext)
+        with _PROTO_LOCK:
+            if len(ext) > len(_PROTO_CACHE.get(key, ())):
+                _PROTO_CACHE[key] = tuple(ext)
         pm = tuple(ext)
     if not pm:
         return _FEATURE_BASE
@@ -5273,10 +5280,6 @@ def stream_table_format_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sf_dir -> memoized bronze table path (immutable fixture history)
-_CDF_MERGE_BRONZE: dict[str, str] = {}
-
-
 @register(
     "stream_cdf_apply_merge",
     oracle="""
@@ -5324,19 +5327,19 @@ def stream_cdf_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _idle_split_src discipline: fixture prep is not the operator
     # under test, and rebuilding 4 commits per bench rep dominated the
     # warm cost); silver + the stream checkpoint rotate per invocation
-    from fluent_bit_filter_math_spark.scratch import dir_key
-
-    bkey = os.path.abspath(sf_dir)
-    bronze = _CDF_MERGE_BRONZE.get(bkey)
-    if bronze is None or latest_version(bronze) != 3:
-        bbase = scratch_dir(f"tf-cdf-merge-bronze-{dir_key(sf_dir)}")
-        bronze = os.path.join(bbase, "bronze")
+    def build() -> str:
+        bronze = os.path.join(artifacts.new_dir("cdf-bronze"), "bronze")
         mx = int(ev.agg(F.max("event_id")).collect()[0][0])
         tf_append(ev.filter(F.col("event_id") % 3 == 0), bronze)
         tf_append(ev.filter(F.col("event_id") % 3 == 1), bronze)
         tf_delete(spark, bronze, [("event_id", ">", (3 * mx) // 4)])
         tf_append(ev.filter(F.col("event_id") % 3 == 2), bronze)
-        _CDF_MERGE_BRONZE[bkey] = bronze
+        return bronze
+
+    bronze = artifacts.get_or_build(spark, "cdf_bronze", sf_dir, build)
+    if latest_version(bronze) != 3:  # stricter than "the dir exists"
+        artifacts.release(spark, "cdf_bronze", sf_dir)
+        bronze = artifacts.get_or_build(spark, "cdf_bronze", sf_dir, build)
 
     base = scratch_dir("tf-cdf-merge")
     silver = os.path.join(base, "silver")

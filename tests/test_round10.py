@@ -151,8 +151,9 @@ def test_split_scratch_tags_keyed_by_sf_dir(spark, sf_dir, tmp_path):
     across sf_dirs, so a second sf_dir's cache miss rotated the
     generation and deleted the first sf_dir's cached split (the glob
     guard rebuilt it — correctness held, memoization didn't). With the
-    dir_key()-suffixed tags, alternating sf_dirs must keep BOTH splits
-    alive and return cached paths without rebuilding."""
+    splits keyed by sf_dir in the artifact store, alternating sf_dirs
+    must keep BOTH splits alive and return cached paths without
+    rebuilding."""
     from fluent_bit_filter_math_spark.streaming.stateful import (
         _kmv_split_src,
     )
@@ -173,17 +174,6 @@ def test_split_scratch_tags_keyed_by_sf_dir(spark, sf_dir, tmp_path):
     # and a third call must be a pure cache hit on the same path
     assert _kmv_split_src(spark, sf_dir) == p1
     assert sorted(glob.glob(p1 + "/part-*.parquet")) == files1
-
-
-def test_dir_key_distinct_for_same_basename(tmp_path):
-    from fluent_bit_filter_math_spark.scratch import dir_key
-
-    a = tmp_path / "x" / "sf0.1"
-    b = tmp_path / "y" / "sf0.1"
-    a.mkdir(parents=True)
-    b.mkdir(parents=True)
-    assert dir_key(str(a)) != dir_key(str(b))
-    assert dir_key(str(a)) == dir_key(str(a))
 
 
 def test_regression_guard_zero_baseline(tmp_path, monkeypatch):

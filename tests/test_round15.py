@@ -456,6 +456,47 @@ class TestProtocolVersioning:
         assert tf.required_reader_version(t) == 1
         assert tf.tf_read(spark, t).count() == 1
 
+    def test_cache_publish_keeps_the_longer_prefix(
+        self, tmp_path, monkeypatch
+    ):
+        """A reader that read an older head must not overwrite the
+        longer prefix a racing reader published between its length
+        check and its store (the check and the store are one step)."""
+        import json as _json
+        import os
+        import threading
+
+        t = str(tmp_path / "t")
+        os.makedirs(os.path.join(t, tf._LOG_DIR))
+
+        def commit(v):
+            with open(tf._log_path(t, v), "w") as f:
+                f.write(_json.dumps({"action": "append"}))
+
+        for v in range(3):
+            commit(v)
+
+        class RacingCache(dict):
+            other = None
+
+            def __setitem__(self, key, value):
+                if self.other is None:  # first publish: a newer reader races
+                    commit(3)
+                    commit(4)
+                    self.other = threading.Thread(
+                        target=tf.required_reader_version, args=(t,)
+                    )
+                    self.other.start()
+                    self.other.join(2.0)  # it blocks on the publish lock
+                super().__setitem__(key, value)
+
+        cache = RacingCache()
+        monkeypatch.setattr(tf, "_PROTO_CACHE", cache)
+        assert tf.required_reader_version(t, 2) == tf._FEATURE_BASE
+        cache.other.join(30)
+        assert not cache.other.is_alive()
+        assert len(cache[os.path.abspath(t)]) == 5
+
 
 # ---------------------------------------------------------------------------
 # 7 — VACUUM vs concurrent readers (VERDICT r14 #6)

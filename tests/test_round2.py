@@ -139,17 +139,16 @@ def test_jaccard_dfcap_hot_shingles(spark, tmp_path):
 
 
 def test_release_shingle_index_unpersists(spark, sf_dir):
+    from fluent_bit_filter_math_spark import artifacts
     from fluent_bit_filter_math_spark.operators.dedup import (
-        _SHINGLE_CACHE,
         _shingle_index,
         release_shingle_index,
     )
 
     _shingle_index(spark, sf_dir)
-    app_id = spark.sparkContext.applicationId
-    assert any(k[0] == app_id for k in _SHINGLE_CACHE)
+    assert artifacts.keys(spark, "shingle_index")
     release_shingle_index(spark)
-    assert not any(k[0] == app_id for k in _SHINGLE_CACHE)
+    assert not artifacts.keys(spark, "shingle_index")
 
 
 # ---------------------------------------------------------------------------
@@ -963,18 +962,17 @@ def test_pagerank_matches_pure_python_fixpoint(spark):
 
 
 def test_release_edge_index_unpersists(spark):
+    from fluent_bit_filter_math_spark import artifacts
     from fluent_bit_filter_math_spark.operators.graph import (
-        _EDGE_CACHE,
         _edge_index,
         release_edge_index,
     )
 
     sf = "/root/testdata/sf0.001"
     _edge_index(spark, sf)
-    app_id = spark.sparkContext.applicationId
-    assert any(k[0] == app_id for k in _EDGE_CACHE)
+    assert artifacts.keys(spark, "edge_index")
     release_edge_index(spark)
-    assert not any(k[0] == app_id for k in _EDGE_CACHE)
+    assert not artifacts.keys(spark, "edge_index")
 
 
 def test_parameterized_sql(spark):
